@@ -32,7 +32,9 @@ from pyspark.sql import functions as F
 from spark_stream_analyzer_spark.functions.scalar import guarded_ratio, round6
 
 #: conditional-aggregate building blocks, reused by batch + streaming forms
-def counter_aggs() -> list[Column]:
+def cumulative_counter_aggs() -> list[Column]:
+    """kills/deaths/assists as long sums; damage as the column's own sum
+    (a long sum for the wire parsers' ``amount``) cast to double."""
     one_if = lambda t: F.sum(F.when(F.col("type") == t, 1).otherwise(0)).cast("long")
     return [
         one_if("kill").alias("kills"),
@@ -41,6 +43,12 @@ def counter_aggs() -> list[Column]:
         F.coalesce(
             F.sum(F.when(F.col("type") == "damage", F.col("amount"))), F.lit(0.0)
         ).alias("damage"),
+    ]
+
+
+def counter_aggs() -> list[Column]:
+    return [
+        *cumulative_counter_aggs(),
         F.max("second").alias("second"),
         F.max("round").alias("round"),
     ]

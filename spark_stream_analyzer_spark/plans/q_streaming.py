@@ -3,7 +3,7 @@
 Unlike the batch twins in q_wire.py, this entry actually runs Structured
 Streaming inside the driver's harness: synthesize wire lines from the
 events table, write them as two replay files (two micro-batches), stream
-them through parse → union → ``applyInPandasWithState`` snapshots →
+them through parse → union → native update-mode snapshot aggregation →
 memory sink, then reduce the emitted per-batch snapshots to final state.
 
 Determinism notes (why this is oracle-able at all):
@@ -93,8 +93,10 @@ def _synth_uniform_lines(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, D
                       ELSE CAST(kills AS DOUBLE) / CAST(deaths AS DOUBLE) END, 6) AS kd_ratio
     FROM agg
     """,
-    doc="A2 exact-parity stateful stream: live applyInPandasWithState over "
-    "2-micro-batch file replay; final state reduced from emitted snapshots",
+    doc="A2 exact-parity stateful stream: live native update-mode snapshot "
+    "aggregation (batch-local second/round/name keyed on the micro-batch "
+    "timestamp) over 2-micro-batch file replay; final state reduced from "
+    "emitted snapshots",
 )
 def q_streaming_snapshot_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kills, damages = _synth_uniform_lines(spark, sf_dir)
@@ -118,11 +120,8 @@ def q_streaming_snapshot_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_damage_lines(file_lines_stream(spark, ddir))
     )
     name = f"snap_{uuid.uuid4().hex[:8]}"
-    # Python-stateful: per-batch cost is group-by-group Arrow exchange,
-    # so worker parallelism (not commit count) sets the floor — see
-    # _FIXTURE_PANDAS_PARTS
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _FIXTURE_PANDAS_PARTS)
+    spark.conf.set("spark.sql.shuffle.partitions", _FIXTURE_SHUFFLE_PARTS)
     try:
         q = (
             snapshot_player_stats_stream(events)
@@ -247,12 +246,13 @@ _MTIME_STEP_S = 10
 #: by throughput (state store count scales horizontally with executors)
 _FIXTURE_SHUFFLE_PARTS = "2"
 
-#: PYTHON-stateful fixtures (``applyInPandasWithState``) are the
-#: opposite regime: per-batch cost is Python-side group processing,
-#: which parallelizes across Arrow workers — measured at sf0.1,
-#: snapshot_stats is 13.2 s at 2 partitions vs 4.1 s at 8 (the state
-#: protocol exchanges each group separately, so worker count is the
-#: lever, not commit count).  Keep these at 8.
+#: The PYTHON-stateful fixture (``applyInPandasWithState``:
+#: streaming_state_ttl_eviction) is the opposite regime: per-batch cost
+#: is Python-side group processing, which parallelizes across Arrow
+#: workers (measured at sf0.1 on the former pandas snapshot row: 13.2 s
+#: at 2 partitions vs 4.1 s at 8 — the state protocol exchanges each
+#: group separately, so worker count is the lever, not commit count).
+#: Keep it at 8.
 _FIXTURE_PANDAS_PARTS = "8"
 
 

@@ -7,8 +7,11 @@ driver-side query handle, exactly like the reference's Spring
 controller. Routes (reference parity):
 
 * ``POST /start``  → 200 ``{"started": true}`` | 409 if already running
+  | 500 ``{"started": false, "error": ...}`` if building the query raised
+  (e.g. a ``folderPath`` that does not exist)
 * ``POST /stop``   → 200 ``{"stopped": true}`` | 409 if idle
-* ``GET  /status`` → 200 controller status JSON
+* ``GET  /status`` → 200 controller status JSON (a dead query's
+  exception message and last batch id included)
 
 The reference returns plain strings ("Spark Streaming gestartet!");
 structured JSON is the deliberate deviation — machine-checkable, and
@@ -68,9 +71,14 @@ class ControlServer:
                     if takes_folder:
                         qs = urllib.parse.parse_qs(parsed.query)
                         folder = qs.get("folderPath", [None])[0]
-                        ok = controller.start(lambda: factory(folder))
+                        build = lambda: factory(folder)  # noqa: E731
                     else:
-                        ok = controller.start(factory)
+                        build = factory
+                    try:
+                        ok = controller.start(build)
+                    except Exception as e:  # noqa: BLE001 — reported to the client
+                        self._reply(500, {"started": False, "error": f"{type(e).__name__}: {e}"})
+                        return
                     self._reply(200 if ok else 409, {"started": ok})
                 elif parsed.path == "/stop":
                     ok = controller.stop()

@@ -57,14 +57,23 @@ class StreamController:
         return self._query is not None and self._query.isActive
 
     def status(self) -> dict:
+        """``running``, ``id``, ``last_progress``, ``last_batch_id`` (the
+        last completed batch, ``None`` before the first completes) and
+        ``exception`` (the message a dead query failed with, else
+        ``None``). A failed query stays here until the next start."""
         # snapshot once: a concurrent stop() (ThreadingHTTPServer runs
         # /status and /stop on different threads) may null self._query
         # between the check and the dereferences (r10 review)
         q = self._query
         if q is None:
             return {"running": False}
+        running = q.isActive
+        progress = q.lastProgress
+        error = None if running else q.exception()
         return {
-            "running": q.isActive,
+            "running": running,
             "id": str(q.id),
-            "last_progress": q.lastProgress,
+            "last_progress": progress,
+            "last_batch_id": progress["batchId"] if progress else None,
+            "exception": None if error is None else str(error),
         }

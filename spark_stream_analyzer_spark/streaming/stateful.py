@@ -1,22 +1,40 @@
 """Streaming keyed state — the reference's ``mapGroupsWithState`` rebuilt.
 
-Two forms (SURVEY §2.5 A2):
+Two native forms, both update-mode streaming aggregations with no
+watermark (Spark keeps unbounded per-key state itself — the reference's
+lifetime-state semantics, no ``GroupStateTimeout``,
+``spark/SparkStreamingService.java:230-234``). State lives in the state
+store, partial aggregation runs before the shuffle, no Python in the loop:
 
-* :func:`running_player_stats_stream` — **native** streaming aggregation:
-  the same conditional-aggregate expressions as the batch form, in
-  ``update`` output mode with no watermark → Spark maintains unbounded
-  running totals itself, exactly the reference's lifetime-state semantics
-  (no ``GroupStateTimeout``, ``spark/SparkStreamingService.java:230-234``).
-  This is the scale path: state lives in the state store (RocksDB-able),
-  partial aggregation before the shuffle, no Python in the loop.
+* :func:`running_player_stats_stream` — running totals (the batch
+  form's aggregate expressions, streamed).
 
-* :func:`snapshot_player_stats_stream` — **exact-parity** variant via
-  ``applyInPandasWithState`` (Arrow-vectorized), replicating the
-  reference's per-batch quirks (``spark/PlayerStatsUpdater.java:16-51``):
-  cumulative counters live in state, but ``second``/``round`` are maxima
-  over *only the current micro-batch* and the emitted name is the first
-  non-blank name *in the batch* (else the stored one, else blank). One
-  snapshot row per key per batch it appears in.
+* :func:`snapshot_player_stats_stream` — **exact-parity** snapshots,
+  replicating the reference's per-batch quirks
+  (``spark/PlayerStatsUpdater.java:16-51``): cumulative counters, but
+  ``second``/``round`` are maxima over *only the current micro-batch*
+  and the emitted name is the batch's first non-blank name (else the
+  stored one, else blank). One snapshot row per key per batch it
+  appears in. The batch-local fields are ``max(struct(_batch_ts, …))``
+  aggregates over a ``current_timestamp()`` column projected before the
+  ``groupBy``: inside a stream that is the micro-batch timestamp (kept
+  in ``offsets/<batchId>``, so a replayed batch sees the same value),
+  and a key's current batch is the one with the highest timestamp.
+
+  *Name tie rule*: a batch has no row order once it is aggregated, so
+  "first non-blank name" is the name of the key's earliest non-blank
+  event (lowest ``second``, then the lexicographically lowest name) in
+  its latest batch that has one; ``""`` when no batch has one.
+
+  *Assumption*: micro-batch timestamps increase from batch to batch (the
+  trigger clock is read at each batch start, batches are > 1 ms apart).
+  A wall clock stepped backwards across a restart would let the
+  pre-restart batch win ``second``/``round``/name for keys it holds.
+
+:func:`snapshot_player_stats_stream_tws` keeps the Python fold
+(:func:`_make_snapshot_fold`) on the ``transformWithState`` API, and
+:func:`ttl_evicting_totals_stream` stays on ``applyInPandasWithState``:
+it needs event-time timers, which a native aggregation has no form of.
 
 State-schema changelog (checkpoint compatibility):
 
@@ -28,14 +46,19 @@ State-schema changelog (checkpoint compatibility):
   silent corruption). Operators must start the TTL stream from a fresh
   checkpoint location after upgrading; all other stateful streams'
   schemas are unchanged.
+* **BREAKING for snapshot streams**: :func:`snapshot_player_stats_stream`
+  moved from ``applyInPandasWithState`` (state: one ``kills, deaths,
+  assists, damage, name`` value per key) to a native aggregation (state:
+  the aggregation buffers). A checkpoint
+  written by the pandas form fails LOUDLY at restart (the stateful
+  operator and its state schema no longer match); start the snapshot
+  stream from a fresh checkpoint location after upgrading.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -45,8 +68,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from spark_stream_analyzer_spark.functions.scalar import guarded_ratio
 from spark_stream_analyzer_spark.operators.player_stats import (
     counter_aggs,
+    cumulative_counter_aggs,
     derived_metrics,
 )
 
@@ -65,17 +90,6 @@ SNAPSHOT_SCHEMA = StructType(
     ]
 )
 
-#: persisted per-key state (reference model/PlayerState.java + stored name)
-STATE_SCHEMA = StructType(
-    [
-        StructField("kills", LongType()),
-        StructField("deaths", LongType()),
-        StructField("assists", LongType()),
-        StructField("damage", DoubleType()),
-        StructField("name", StringType()),
-    ]
-)
-
 
 def running_player_stats_stream(events: DataFrame) -> DataFrame:
     """Native streaming agg over normalized events (scale path).
@@ -86,9 +100,8 @@ def running_player_stats_stream(events: DataFrame) -> DataFrame:
 
 
 def _make_snapshot_fold():
-    """The ONE per-batch fold both stateful APIs wrap (r10 review: it had
-    been restated verbatim in each, a drift hazard for the module's
-    parity claim). Mirrors reference PlayerStatsUpdater.updatePlayerStats:
+    """The per-batch Python fold of the ``transformWithState`` twin.
+    Mirrors reference PlayerStatsUpdater.updatePlayerStats:
     fold the batch's events into carried counters, compute derived
     metrics, return ``(new_state_tuple, emitted_row_dict)``.
 
@@ -137,44 +150,62 @@ def _make_snapshot_fold():
     return fold
 
 
-def _make_update_snapshots():
-    """The applyInPandasWithState wrapper around the shared fold."""
-    import pandas as pd
-
-    fold = _make_snapshot_fold()
-
-    def update_snapshots(
-        key: tuple, pdfs: Iterable["pd.DataFrame"], state: GroupState
-    ) -> Iterable["pd.DataFrame"]:
-        (steam_id,) = key
-        carried = state.get if state.exists else (0, 0, 0, 0.0, "")
-        new_state, row = fold(steam_id, pdfs, carried)
-        state.update(new_state)
-        yield pd.DataFrame([row])
-
-    return update_snapshots
-
-
 def snapshot_player_stats_stream(events: DataFrame) -> DataFrame:
-    """Exact-parity snapshot stream (reference semantics incl. quirks).
+    """Exact-parity snapshot stream (reference semantics incl. quirks;
+    see the module docstring for the name tie rule and the batch
+    timestamp assumption).
 
     ``events`` must carry ``player, steam_id, type, second, amount,
     round`` (the wire-parser output). State never times out — parity with
     the reference's missing ``GroupStateTimeout`` (bounded by key count).
+    Use with ``outputMode("update")``.
     """
-    return events.groupBy("steam_id").applyInPandasWithState(
-        _make_update_snapshots(),
-        outputStructType=SNAPSHOT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    ts = F.col("_batch_ts")
+    latest = lambda c: F.max(F.struct(ts, F.col(c).alias("v")))["v"]
+    first_name = F.min(
+        F.when(
+            F.col("player") != "",
+            F.struct(
+                (-F.unix_micros(ts)).alias("newest"),
+                F.col("second").alias("earliest"),
+                F.col("player").alias("name"),
+            ),
+        )
+    )["name"]
+    # projected before the groupBy, never inside an aggregate argument:
+    # a nondeterministic expression there fails analysis at the first
+    # micro-batch
+    agg = (
+        events.withColumn("_batch_ts", F.current_timestamp())
+        .groupBy("steam_id")
+        .agg(
+            *cumulative_counter_aggs(),
+            latest("second").alias("_second"),
+            latest("round").alias("_round"),
+            first_name.alias("_name"),
+        )
+    )
+    clamp0 = lambda c: F.greatest(F.coalesce(F.col(c), F.lit(0)), F.lit(0))
+    rnd = clamp0("_round")
+    return agg.select(
+        "steam_id",
+        F.coalesce("_name", F.lit("")).alias("player_name"),
+        clamp0("_second").cast("long").alias("second"),
+        "kills",
+        "deaths",
+        "assists",
+        "damage",
+        guarded_ratio(F.col("kills"), F.col("deaths")).alias("kd_ratio"),
+        F.when(rnd == 0, F.lit(None).cast("double"))
+        .otherwise(F.col("damage") / rnd.cast("double"))
+        .alias("damage_per_round"),
     )
 
 
 def _make_snapshot_processor():
-    """StatefulProcessor twin of :func:`_make_update_snapshots` for the
+    """StatefulProcessor around :func:`_make_snapshot_fold` for the
     Spark 4.x ``transformWithState`` API (closure-built for the same
-    pickle-by-value reason). Same fold, same emitted row."""
+    pickle-by-value reason)."""
     import pandas as pd
 
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
@@ -219,7 +250,7 @@ def snapshot_player_stats_stream_tws(events: DataFrame) -> DataFrame:
     every deployment (not in this container). The PROCESSOR LOGIC is
     nonetheless fully tested in-process (tests/test_streaming.py drives
     the StatefulProcessor against a stub state handle and asserts row
-    parity with the live-tested ``applyInPandasWithState`` form); only
+    parity with the live native form); only
     the wire transport needs protobuf. Fail loudly up front rather than
     mid-stream in a worker.
     """
@@ -229,8 +260,8 @@ def snapshot_player_stats_stream_tws(events: DataFrame) -> DataFrame:
         raise RuntimeError(
             "transformWithStateInPandas requires google.protobuf on driver "
             "and workers (the TWS state-server protocol); install protobuf "
-            "or use snapshot_player_stats_stream (applyInPandasWithState), "
-            "which has identical semantics"
+            "or use snapshot_player_stats_stream (native aggregation), "
+            "which has the same semantics"
         ) from e
     return events.groupBy("steam_id").transformWithStateInPandas(
         statefulProcessor=_make_snapshot_processor(),
@@ -265,7 +296,7 @@ TTL_STATE_SCHEMA = StructType(
 
 
 def _make_ttl_update(gap_seconds: int):
-    """Closure (see :func:`_make_update_snapshots` for why) implementing
+    """Closure (see :func:`_make_snapshot_fold` for why) implementing
     idle-key eviction with EVENT-TIME TIMERS: each update re-arms the
     key's timer at last_event + gap; when the watermark passes it, the
     group is invoked with ``state.hasTimedOut`` and no rows — it emits a

@@ -90,3 +90,18 @@ def test_merge_never_pollutes_from_failed_rows(tmp_path):
 def test_merge_anchors_par_calib_once(tmp_path):
     out = _run_merge(tmp_path, {}, _detail({"q": 1.0}))
     assert out["par_calib_sec"] == 0.5
+
+
+def test_bench_sentinels_are_registry_names():
+    """Every SENTINELS row must name a registry query: the summary line
+    only keeps names it timed, so a renamed query would silently drop out
+    of the cross-round overlap the sentinels exist for."""
+    sys.path.insert(0, ROOT)
+    try:
+        import bench
+    finally:
+        sys.path.remove(ROOT)
+    from spark_stream_analyzer_spark.plans.registry import queries
+
+    missing = [s for s in bench.SENTINELS if s not in queries()]
+    assert not missing, missing

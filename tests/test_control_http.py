@@ -99,3 +99,63 @@ def test_http_start_passes_folder_path(spark, tmp_path):
         assert code == 200
     finally:
         srv.shutdown()
+
+
+def test_http_start_bad_folder_returns_500_with_error(spark, tmp_path):
+    """A factory that raises (here: the file source rejects a folder
+    that does not exist) answers /start with 500 JSON carrying the
+    error instead of dropping the connection; the server stays usable."""
+
+    def build(folder):
+        ev = parse_kill_lines(file_lines_stream(spark, folder))
+        return to_memory(ev, "t_http_bad_folder", output_mode="append")
+
+    srv = ControlServer(build)
+    srv.start()
+    try:
+        missing = str(tmp_path / "no_such_dir").replace("/", "%2F")
+        code, body = _call(srv.address, "POST", f"/start?folderPath={missing}")
+        assert code == 500 and body["started"] is False
+        assert "no_such_dir" in body["error"]
+        code, body = _call(srv.address, "GET", "/status")
+        assert code == 200 and body == {"running": False}
+    finally:
+        srv.shutdown()
+
+
+def test_http_status_reports_query_dead_in_first_batch(spark, tmp_path):
+    """/start returns 200 for a plan that only fails when its first
+    micro-batch runs; /status must then carry the failure: not running,
+    the exception message, and no completed batch."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "000.txt").write_text(KILL)
+
+    def build():
+        ev = parse_kill_lines(file_lines_stream(spark, str(src)))
+        dies = ev.select(F.raise_error(F.lit("first-batch-boom")).alias("x"))
+        return to_memory(dies, "t_http_dies", output_mode="append")
+
+    srv = ControlServer(build)
+    srv.start()
+    try:
+        code, body = _call(srv.address, "POST", "/start")
+        assert code == 200 and body == {"started": True}
+        deadline = time.time() + 60
+        while True:
+            code, body = _call(srv.address, "GET", "/status")
+            if not body["running"] or time.time() > deadline:
+                break
+            time.sleep(0.2)
+        assert code == 200 and body["running"] is False
+        assert "first-batch-boom" in body["exception"]
+        assert body["last_batch_id"] is None and "id" in body
+        # a dead query is not running: /stop is a no-op, /start rebuilds
+        code, _ = _call(srv.address, "POST", "/stop")
+        assert code == 409
+    finally:
+        srv.shutdown()

@@ -126,6 +126,76 @@ def test_snapshot_stream_name_is_batch_first(spark, tmp_path):
     assert [r.player_name for r in rows] == ["Old", "New"]
 
 
+def _snapshot_events(spark, src):
+    return parse_kill_lines(file_lines_stream(spark, str(src))).unionByName(
+        parse_damage_lines(file_lines_stream(spark, str(src)))
+    )
+
+
+def test_snapshot_stream_name_tie_rule_and_native_plan(spark, tmp_path):
+    """Two names for one key in ONE batch: the aggregate has no row
+    order, so the earliest event (lowest second) names the key, and at
+    equal seconds the lexicographically lowest name wins. The plan is a
+    native streaming aggregation: no Python operator, a StateStoreSave."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _write(
+        src,
+        "000.txt",
+        "x,25600,2,Zed,S_X,x,x,Bob,S_B,x,x,0,S_C\n"  # sec 200
+        "x,12800,1,Yan,S_X,x,x,Bob,S_B,x,x,0,S_C\n"  # sec 100: earliest
+        "x,12800,1,Bo,S_Y,x,x,Cy,S_C,x,x,0,S_C\n"
+        "x,12800,1,Al,S_Y,x,x,Cy,S_C,x,x,0,S_C\n",  # same second: lowest name
+    )
+    q = to_memory(snapshot_player_stats_stream(_snapshot_events(spark, src)), "t_snap_tie")
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.explainInternal(False)
+    finally:
+        q.stop()
+    names = {
+        r.steam_id: (r.player_name, r.second, r.kills)
+        for r in spark.table("t_snap_tie").collect()
+    }
+    assert names["S_X"] == ("Yan", 200, 2)
+    assert names["S_Y"] == ("Al", 100, 2)
+    assert "StateStoreSave" in plan
+    assert "Python" not in plan and "Pandas" not in plan, plan
+
+
+def test_snapshot_stream_restart_no_double_count_second_batch_local(spark, tmp_path):
+    """Restart from the checkpoint: counters continue from the committed
+    state (not re-counted), the post-restart batch's ``second`` and
+    ``round`` are its own even when lower than the batch before the
+    restart, and a key unnamed in it keeps its stored name."""
+    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
+    src.mkdir()
+    _write(src, "000.txt", KILL_B0 + DMG_B0)  # sec 100, round 1
+
+    def run():
+        q = to_parquet_snapshots(
+            snapshot_player_stats_stream(_snapshot_events(spark, src)), str(out), str(ckpt)
+        )
+        _drain(q)
+
+    run()
+    # batch 1, after the restart: S_A only takes 5 damage (blank name) at
+    # sec 50, round 0, so its stored name carries over; Bob kills Dana
+    _write(src, "001.txt", "x,6400,0,x,x,100,95,x,x,S_A\nx,6400,0,Bob,S_B,x,x,Dana,S_D,x,x,0,S_C\n")
+    run()
+    rows = {
+        (r.batch_id, r.steam_id): r
+        for r in spark.read.option("basePath", str(out)).parquet(str(out)).collect()
+    }
+    a0, a1 = rows[(0, "S_A")], rows[(1, "S_A")]
+    assert (a0.kills, a0.deaths, a0.damage, a0.second) == (1, 0, 30.0, 100)
+    assert (a1.kills, a1.deaths, a1.damage, a1.second) == (1, 0, 35.0, 50)
+    assert a1.player_name == "Alice" and a1.kd_ratio == 1.0
+    assert a1.damage_per_round is None  # batch-local round 0, not round 1
+    b1 = rows[(1, "S_B")]
+    assert (b1.kills, b1.deaths, b1.player_name, b1.second) == (1, 1, "Bob", 50)
+
+
 def test_checkpoint_restart_no_duplicates(spark, tmp_path):
     src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
     src.mkdir()
@@ -501,7 +571,7 @@ def test_kafka_connector_builder_when_available(spark):
 
 def test_transform_with_state_parity(spark, tmp_path):
     """The transformWithState (Spark 4.x) twin emits the same snapshots
-    as the applyInPandasWithState form: cumulative counters, batch-local
+    as the native form: cumulative counters, batch-local
     maxima, state-persisted names.
 
     Gated: the TWS state server speaks protobuf to the Python worker;
@@ -543,24 +613,24 @@ def test_transform_with_state_parity(spark, tmp_path):
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
-def test_tws_processor_logic_parity_in_process():
-    """The StatefulProcessor twin folds IDENTICALLY to the live-tested
-    applyInPandasWithState updater — verified WITHOUT the streaming
-    machinery, by driving both against stub state objects on the same
-    two-batch input (cumulative counters, batch-local maxima, blank-name
-    fallback, damage accumulation).
+def test_tws_processor_logic_parity_in_process(spark, tmp_path):
+    """The StatefulProcessor twin folds IDENTICALLY to the live native
+    snapshot stream — the processor driven WITHOUT the streaming machinery
+    against a stub state handle, the native stream over the same two
+    batches as replay files (cumulative counters, batch-local maxima,
+    blank-name fallback, damage accumulation).
 
     This is the ungated counterpart of test_transform_with_state_parity:
     the gated test exercises the protobuf transport where available; this
     one pins the processor's fold logic everywhere, so the twin is
     logic-tested even in protobuf-less containers.
     """
+    import json
+    import os
+
     import pandas as pd
 
-    from spark_stream_analyzer_spark.streaming.stateful import (
-        _make_snapshot_processor,
-        _make_update_snapshots,
-    )
+    from spark_stream_analyzer_spark.streaming.stateful import _make_snapshot_processor
 
     class StubValueState:
         def __init__(self):
@@ -581,21 +651,6 @@ def test_tws_processor_logic_parity_in_process():
 
         def getValueState(self, name, ddl):
             return self.state
-
-    class StubGroupState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
 
     batch0 = pd.DataFrame(
         {
@@ -620,18 +675,48 @@ def test_tws_processor_logic_parity_in_process():
 
     proc = _make_snapshot_processor()
     proc.init(StubHandle())
-    upd = _make_update_snapshots()
-    gstate = StubGroupState()
+    tws_rows = [
+        pd.concat(list(proc.handleInputRows(("S_A",), iter([b]), None))).iloc[0].to_dict()
+        for b in (batch0, batch1)
+    ]
 
-    for batch in (batch0, batch1):
-        tws_out = pd.concat(list(proc.handleInputRows(("S_A",), iter([batch]), None)))
-        apis_out = pd.concat(list(upd(("S_A",), iter([batch]), gstate)))
-        pd.testing.assert_frame_equal(
-            tws_out.reset_index(drop=True), apis_out.reset_index(drop=True)
+    src = tmp_path / "events"
+    src.mkdir()
+    # the file source orders pending files by millisecond mtime: pin it
+    now = time.time()
+    for i, b in enumerate((batch0, batch1)):
+        path = src / f"{i:03d}.json"
+        path.write_text(
+            "".join(
+                json.dumps({k: (None if pd.isna(v) else v) for k, v in rec.items()}) + "\n"
+                for rec in b.to_dict("records")
+            )
         )
+        os.utime(path, (now - 60 + 10 * i, now - 60 + 10 * i))
+    events = (
+        spark.readStream.schema(
+            "player string, steam_id string, type string, second long, "
+            "amount double, round long"
+        )
+        .option("maxFilesPerTrigger", "1")
+        .json(str(src))
+    )
+    q = to_memory(snapshot_player_stats_stream(events), "t_native_twin")
+    _drain(q)
+    native_rows = [
+        r.asDict() for r in spark.sql("SELECT * FROM t_native_twin ORDER BY kills + deaths").collect()
+    ]
+    assert len(native_rows) == 2
+    for tws, nat in zip(tws_rows, native_rows):
+        assert set(tws) == set(nat)
+        for col, v in tws.items():
+            if v is None or nat[col] is None:
+                assert v is None and nat[col] is None, col
+            else:
+                assert nat[col] == pytest.approx(v), col
 
     # and the fold itself is right, not just self-consistent
-    final = tws_out.iloc[0]
+    final = tws_rows[1]
     assert final["kills"] == 1 and final["deaths"] == 1 and final["assists"] == 1
     assert final["damage"] == 40.0
     assert final["second"] == 300  # batch-local max, not cumulative

@@ -1,10 +1,13 @@
-"""Streaming throughput probe: native update-mode agg vs the
-applyInPandasWithState parity twin (SCALING.md streaming evidence).
+"""Streaming throughput probe: the running-totals update-mode agg vs the
+exact-parity snapshot agg (SCALING.md streaming evidence).
 
 Replays generated wire kill-lines through both stateful paths with the
-same micro-batch layout and reports rows/sec. The native path keeps
-state JVM-side (partial agg + state store); the Python twin crosses the
-Arrow boundary per batch per key group — this measures that gap.
+same micro-batch layout and reports rows/sec. Both keep state JVM-side
+(partial agg + state store); the snapshot "twin" adds the batch-local
+``max(struct(_batch_ts, …))`` fields and the name rule. It was an
+``applyInPandasWithState`` twin until the snapshot stream went native;
+the output keys (``pandas_twin_*``) keep their names so recorded
+baselines stay comparable.
 
 Usage: python tools/stream_throughput.py [n_lines] [n_batches]
 """
