@@ -30,6 +30,7 @@ from spark_stream_analyzer_spark.functions.scalar import guarded_ratio, msum6, r
 from spark_stream_analyzer_spark.plans.q_wire import _O_BASE, _base
 from spark_stream_analyzer_spark.plans.registry import register
 from spark_stream_analyzer_spark.sources.wire import parse_damage_lines, parse_kill_lines
+from spark_stream_analyzer_spark.streaming.sinks import start_with_partitions
 from spark_stream_analyzer_spark.streaming.sources import file_lines_stream
 from spark_stream_analyzer_spark.streaming.stateful import snapshot_player_stats_stream
 
@@ -120,25 +121,7 @@ def q_streaming_snapshot_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_damage_lines(file_lines_stream(spark, ddir))
     )
     name = f"snap_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _FIXTURE_SHUFFLE_PARTS)
-    try:
-        q = (
-            snapshot_player_stats_stream(events)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        import shutil
-
-        shutil.rmtree(workdir, ignore_errors=True)  # replay files consumed
+    _run_to_memory(snapshot_player_stats_stream(events), name, spark, "update", workdir)
 
     snaps = spark.table(name)
     final = snaps.groupBy("steam_id").agg(
@@ -240,10 +223,9 @@ _MTIME_STEP_S = 10
 #: keeps four), so fixture wall time scales with partitions x stateful
 #: operators x micro-batches while the data itself is tiny (<=10k rows,
 #: <=~200 keys).  Measured at sf0.1: 8 -> 2 partitions cuts the three
-#: join fixtures 25-35% with identical output (r9).  2, not 1, so the
-#: keyed cross-partition shuffle path stays exercised.  This is a
-#: REPLAY-FIXTURE setting only — a production stream sizes partitions
-#: by throughput (state store count scales horizontally with executors)
+#: join fixtures 25-35% with identical output (r9).  2, not the engine
+#: sinks' 1 (``streaming/sinks.py:STATE_PARTITIONS``), so the keyed
+#: cross-partition shuffle path stays exercised.
 _FIXTURE_SHUFFLE_PARTS = "2"
 
 #: The PYTHON-stateful fixture (``applyInPandasWithState``:
@@ -320,21 +302,14 @@ def _write_batches(rows, outdir: str, batch_of, fmt) -> None:
 def _run_to_memory(
     stream_df, name: str, spark: SparkSession, mode: str, workdir: str | None = None
 ) -> None:
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _FIXTURE_SHUFFLE_PARTS)
+    writer = stream_df.writeStream.outputMode(mode).format("memory").queryName(name)
     try:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
+        q = start_with_partitions(writer, spark, _FIXTURE_SHUFFLE_PARTS)
         try:
             q.processAllAvailable()
         finally:
             q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if workdir is not None:
             # replay files are fully consumed once the query stops; the
             # memory-sink table holds the result, so the workdir is pure
@@ -1956,25 +1931,18 @@ def q_streaming_jdbc_sink_snapshots(spark: SparkSession, sf_dir: str) -> DataFra
         )
         return to_jdbc_snapshots(running_player_stats_stream(events), url, table, chk)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _FIXTURE_SHUFFLE_PARTS)
+    q1 = start_run()
     try:
-        q1 = start_run()
-        try:
-            q1.processAllAvailable()
-        finally:
-            q1.stop()
-        for d in (kdir, ddir):
-            os.rename(
-                f"{workdir}/wave2/{os.path.basename(d)}_001.txt", f"{d}/001.txt"
-            )
-        q2 = start_run()  # NEW query, SAME checkpoint → offsets + state restored
-        try:
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
+        q1.processAllAvailable()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        q1.stop()
+    for d in (kdir, ddir):
+        os.rename(f"{workdir}/wave2/{os.path.basename(d)}_001.txt", f"{d}/001.txt")
+    q2 = start_run()  # NEW query, SAME checkpoint → offsets + state restored
+    try:
+        q2.processAllAvailable()
+    finally:
+        q2.stop()
 
     snaps = spark.read.jdbc(url, table)
     n_total = snaps.count()

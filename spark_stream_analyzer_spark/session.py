@@ -16,6 +16,8 @@ on a real multi-executor cluster:
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import SparkSession
 
@@ -72,6 +74,32 @@ def get_spark(
     return spark
 
 
+#: serializes every scoped change to a session-global SQL conf
+#: (:func:`conf_scope`).  Re-entrant, so a scope opened inside another
+#: on the same thread does not deadlock; the nested restore is LIFO.
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, key: str, value: str):
+    """Set one session-global SQL conf for the body, then restore it.
+
+    The session conf is shared: a query that another thread plans or
+    starts on the same session while the scope is open sees ``value``.
+    The module lock is held for the whole body, so overlapping scopes on
+    different threads run one after the other and each restores what it
+    found (unlocked, the second would save the first's value as its
+    "previous" and leave it behind).
+    """
+    with _CONF_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prev)
+
+
 #: opt-in AQE toggle for iterative fixpoint LOOP BODIES (r15, verdict
 #: r14 task 6).  AQE re-optimizes every materialization action, so each
 #: lineage-cut round of the CC / bisection loops fans into 3-6 extra
@@ -88,24 +116,17 @@ def get_spark(
 LOOP_AQE_ENV = "SSA_LOOP_AQE"
 
 
-class loop_aqe_scope:
-    """Context manager: apply the SSA_LOOP_AQE policy around a loop body
-    and restore the previous AQE setting on exit (exception-safe)."""
+def loop_aqe_scope(spark: SparkSession):
+    """Context manager applying the SSA_LOOP_AQE policy around a loop body.
 
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._prev: str | None = None
-
-    def __enter__(self):
-        if os.environ.get(LOOP_AQE_ENV, "").lower() in ("off", "0", "false"):
-            self._prev = self._spark.conf.get("spark.sql.adaptive.enabled")
-            self._spark.conf.set("spark.sql.adaptive.enabled", "false")
-        return self
-
-    def __exit__(self, *exc):
-        if self._prev is not None:
-            self._spark.conf.set("spark.sql.adaptive.enabled", self._prev)
-        return False
+    Unset (the default): a lock-free no-op.  ``off``: AQE is disabled
+    through :func:`conf_scope` for the body and restored on exit, so
+    every other query on the session runs without AQE meanwhile, and
+    other conf scopes wait for the loop round to finish.
+    """
+    if os.environ.get(LOOP_AQE_ENV, "").lower() in ("off", "0", "false"):
+        return conf_scope(spark, "spark.sql.adaptive.enabled", "false")
+    return nullcontext()
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

@@ -209,3 +209,39 @@ def test_live_stream_latency_under_batch_churn(spark, tmp_path):
         f"stream latency degraded under churn: solo median {m_solo:.2f}s "
         f"-> churn median {m_churn:.2f}s ({churned})"
     )
+
+
+def test_overlapping_loop_aqe_scopes_restore_original(spark, monkeypatch):
+    """With SSA_LOOP_AQE=off, loop rounds on several threads open
+    overlapping AQE scopes on one session.  Each body sees AQE off, and
+    once all have exited the session is back at its original value (an
+    unlocked save/restore lets a later scope save an earlier scope's
+    "false" and leave it behind)."""
+    import sys
+    import threading
+
+    from spark_stream_analyzer_spark.session import loop_aqe_scope
+
+    key = "spark.sql.adaptive.enabled"
+    original = spark.conf.get(key)
+    monkeypatch.setenv("SSA_LOOP_AQE", "off")
+    seen: list[str] = []
+
+    def rounds():
+        for _ in range(10):
+            with loop_aqe_scope(spark):
+                seen.append(spark.conf.get(key))
+
+    prev_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=rounds) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == ["false"] * 80
+    assert spark.conf.get(key) == original

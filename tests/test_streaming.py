@@ -9,9 +9,11 @@ and lifecycle control.
 
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from spark_stream_analyzer_spark.operators.events import union_streams
@@ -29,6 +31,24 @@ KILL_B0 = "x,12800,1,Alice,S_A,x,x,Bob,S_B,x,x,Cara,S_C\n"  # sec 100
 KILL_B1 = "x,25600,2,Bob,S_B,x,x,Alice,S_A,x,x,0,S_C\n"  # sec 200, assist dropped
 DMG_B0 = "x,12800,1,x,x,100,70,x,x,S_A\n"  # 30 dmg by Alice
 DMG_B1 = "x,25600,2,x,x,100,55,x,x,S_B\n"  # 45 dmg by Bob
+
+
+PARTS = "spark.sql.shuffle.partitions"
+
+
+def _store_instances(q) -> set[int]:
+    """State-store instance counts over a query's progress reports."""
+    return {
+        int(so["numStateStoreInstances"])
+        for p in q.recentProgress
+        for so in p.get("stateOperators", [])
+    }
+
+
+def _ckpt_partitions(ckpt, batch_id: int) -> str:
+    """The shuffle-partition count a checkpoint recorded for one batch."""
+    meta = (ckpt / "offsets" / str(batch_id)).read_text().splitlines()[1]
+    return json.loads(meta)["conf"][PARTS]
 
 
 def _write(p, name, text):
@@ -205,9 +225,14 @@ def test_checkpoint_restart_no_duplicates(spark, tmp_path):
         ev = parse_kill_lines(file_lines_stream(spark, str(src)))
         return running_player_stats_stream(ev)
 
+    session_parts = spark.conf.get(PARTS)
     q = to_parquet_snapshots(build(), str(out), str(ckpt))
+    # the sink's one state partition is the query's, not the session's
+    assert spark.conf.get(PARTS) == session_parts
     q.processAllAvailable()
     q.stop()
+    assert _store_instances(q) == {1}
+    assert _ckpt_partitions(ckpt, 0) == "1"
 
     _write(src, "001.txt", KILL_B1)
     q = to_parquet_snapshots(build(), str(out), str(ckpt))
@@ -234,6 +259,46 @@ def test_checkpoint_restart_no_duplicates(spark, tmp_path):
     # batch partitions are unique (idempotent overwrite, no replays doubled)
     batches = [r.batch_id for r in snaps.select("batch_id").distinct().collect()]
     assert len(batches) == len(set(batches))
+
+
+def test_failed_stateful_start_restores_session_partitions(spark, tmp_path):
+    """A ``start()`` that Spark rejects (a streaming sort outside complete
+    mode) still restores the session's shuffle partitions."""
+    src = tmp_path / "src"
+    src.mkdir()
+    before = spark.conf.get(PARTS)
+    sorted_stream = parse_kill_lines(file_lines_stream(spark, str(src))).orderBy("second")
+    with pytest.raises(AnalysisException, match="Sorting is not supported"):
+        to_parquet_snapshots(sorted_stream, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert spark.conf.get(PARTS) == before
+
+
+def test_restart_keeps_checkpoint_partitions(spark, tmp_path, monkeypatch):
+    """A checkpoint first written at 8 state partitions (a session's
+    count before the sinks pinned their own) restarts at 8 through the
+    sink, with no double count across the restart."""
+    from spark_stream_analyzer_spark.streaming import sinks
+
+    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
+    src.mkdir()
+    _write(src, "000.txt", KILL_B0)
+
+    def run():
+        ev = parse_kill_lines(file_lines_stream(spark, str(src)))
+        q = to_parquet_snapshots(running_player_stats_stream(ev), str(out), str(ckpt))
+        _drain(q)
+        return q
+
+    with monkeypatch.context() as m:
+        m.setattr(sinks, "STATE_PARTITIONS", 8)
+        assert _store_instances(run()) == {8}
+    _write(src, "001.txt", KILL_B1)
+    assert _store_instances(run()) == {8}
+    assert _ckpt_partitions(ckpt, 1) == "8"
+    rows = spark.read.option("basePath", str(out)).parquet(str(out)).collect()
+    a1 = {r.batch_id: r for r in rows if r.steam_id == "S_A"}[1]
+    # batch 0: Alice 1 kill; batch 1 adds 1 death, and the kill is not re-counted
+    assert (a1.kills, a1.deaths) == (1, 1)
 
 
 def test_lifecycle_controller(spark):
